@@ -2840,7 +2840,7 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT w.source, w.rate_bp,
                    coalesce(nd.n_docs, 0) AS n_docs,
-                   coalesce(ro.rows_out, 0) AS rows_out
+                   CAST(coalesce(ro.rows_out, 0) AS BIGINT) AS rows_out
             FROM w LEFT JOIN nd USING (source) LEFT JOIN ro USING (source)
         """,
         # replay of operators/training.pack_sequences (shard = source,
@@ -2863,9 +2863,11 @@ def oracle_sql() -> dict[str, str]:
                        ) - n_tokens AS start_off
                 FROM t
             )
-            SELECT doc_id, shard, n_tokens, start_off,
-                   start_off // 2048 AS first_seq,
-                   (start_off + greatest(n_tokens, 1) - 1) // 2048 AS last_seq
+            SELECT doc_id, shard, n_tokens,
+                   CAST(start_off AS BIGINT) AS start_off,
+                   CAST(start_off // 2048 AS BIGINT) AS first_seq,
+                   CAST((start_off + greatest(n_tokens, 1) - 1) // 2048
+                        AS BIGINT) AS last_seq
             FROM o
         """,
         # replay of functions.textstats.unigram_lm_scores: corpus-MLE

@@ -41,21 +41,17 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dmp_crawler_spark.extractors.udfs import extract_and_links
+from dmp_crawler_spark.extractors import udfs
 from dmp_crawler_spark.frontier import (
     bloom,
     politeness,
     robots as robots_mod,
     statelog,
 )
-from dmp_crawler_spark.frontier.urlnorm import (
-    normalize_url,
-    resolve_link,
-    with_url_cols,
-)
+from dmp_crawler_spark.frontier.urlnorm import normalize_url, with_url_cols
 from dmp_crawler_spark.functions.strings import expand_seed_template
 
 # F1 extension blacklist (shouldVisit, …/crawler/auto/Crawler4Autohome.java:53-54)
@@ -112,18 +108,26 @@ class EnrichmentSpec:
 
 
 class CorpusFetcher:
-    """Simulated HTTP: the 'web' is the pages corpus table. fetch(admitted)
-    joins on url; misses are fetch failures (S3 retry path). In production
-    this class is replaced by an Arrow-batched HTTP pandas UDF with bounded
-    retry — same output contract."""
+    """Simulated HTTP: the 'web' is the pages corpus table. fetch_extract
+    inner-joins the admitted rows to the corpus on url and hands each
+    page's decoded html (utf-8, GBK fallback) to the shared fused worker
+    (extractors.udfs.fetch_extract), so it emits exactly the page / result
+    / link rows GeneratorFetcher does. A URL missing from the corpus
+    yields no page row, which the engine turns into a retry, then a
+    failure (S3). In production this class is replaced by an
+    Arrow-batched HTTP fetch inside the same worker — same contract."""
 
     def __init__(self, spark: SparkSession, pages_path: str):
         self.pages = spark.read.parquet(pages_path)
 
-    def fetch(self, admitted: DataFrame) -> tuple[DataFrame, DataFrame]:
-        fetched = admitted.join(self.pages, "url", "inner")
-        missed = admitted.join(self.pages.select("url"), "url", "left_anti")
-        return fetched, missed
+    def fetch_extract(self, admitted: DataFrame) -> DataFrame:
+        pages = admitted.join(
+            self.pages.select("url", "html", "lang", "text"), "url", "inner"
+        )
+        return udfs.fetch_extract(
+            pages, admitted.schema,
+            lambda row: (udfs._decode(row["html"]), row["lang"], row["text"]),
+        )
 
 
 class CrawlEngine:
@@ -489,57 +493,39 @@ class CrawlEngine:
             self._commit({**ck, "iter": k, "metrics": metrics})
             return metrics
 
-        fused = hasattr(self.fetcher, "fetch_extract")
-        if fused:
-            # ONE Python pass: fetch + extract + link discovery together;
-            # html never crosses the Arrow boundary (see GeneratorFetcher).
-            # The pass is spilled to parquet partitioned by `kind` instead
-            # of a JVM cache: page/result/link consumers then do pruned
-            # column scans (kind is a directory partition), and the engine
-            # never holds millions of extraction rows on-heap.
-            cdir = self._p("combined", f"iter={k:06d}")
-            # zstd, not snappy: kind=page (the text landing) is ~97% of the
-            # spill's bytes and the single biggest I/O in the loop — zstd
-            # cuts it ~35% for sub-ms/page extra CPU, and the writeback of
-            # this dir is what stalls the NEXT phase's writes on one disk
-            self.fetcher.fetch_extract(admitted).write.mode(
-                "overwrite"
-            ).option("compression", "zstd").partitionBy("kind").parquet(cdir)
-            combined = self.spark.read.parquet(cdir)
-            fetched = combined.filter(F.col("kind") == "page")
-            missed = admitted.join(fetched.select("url"), "url", "left_anti")
-            if self.enrichment:
-                # second fetch pass(es) keyed by the pass-1 entity id; the
-                # enriched copy lands in results/iter=k, which results_df
-                # prefers over this iteration's combined slice
-                enriched = combined.filter(F.col("kind") == "result").select(
-                    "url", "rowkey", "family", "cols"
-                )
-                for spec in self.enrichment:
-                    enriched = self._enrich(enriched, spec)
-                enriched.write.mode("overwrite").parquet(
-                    self._p("results", f"iter={k:06d}")
-                )
-            _mark("fetch_extract_results")
-        else:
-            fetched_raw, missed = self.fetcher.fetch(admitted)
-            # Observation: fetched-count rides along with the first action
-            # over `fetched` — no separate count job.
-            obs_fetched = Observation()
-            fetched = fetched_raw.observe(
-                obs_fetched, F.count(F.lit(1)).alias("n_fetched")
-            ).cache()
-            # ONE Python pass over html: extraction rows + link rows together
-            combined = extract_and_links(fetched).cache()
-            results = combined.filter(F.col("kind") == "result").select(
+        # ONE Python pass: fetch + extract + link discovery together; html
+        # never crosses the Arrow boundary (extractors.udfs.fetch_extract).
+        # The pass is spilled to parquet partitioned by `kind` instead of
+        # a JVM cache: page/result/link consumers then do pruned column
+        # scans (kind is a directory partition), and the engine never
+        # holds millions of extraction rows on-heap.
+        cdir = self._p("combined", f"iter={k:06d}")
+        # zstd, not snappy: kind=page (the text landing) is ~97% of the
+        # spill's bytes and the single biggest I/O in the loop — zstd cuts
+        # it ~35% for sub-ms/page extra CPU, and the writeback of this dir
+        # is what stalls the NEXT phase's writes on one disk
+        fetch_out = self.fetcher.fetch_extract(admitted)
+        fetch_out.write.mode("overwrite").option(
+            "compression", "zstd"
+        ).partitionBy("kind").parquet(cdir)
+        # explicit schema: an iteration where every admitted URL misses
+        # writes no kind=… files, so there are no footers to infer from
+        combined = self.spark.read.schema(fetch_out.schema).parquet(cdir)
+        fetched = combined.filter(F.col("kind") == "page")
+        missed = admitted.join(fetched.select("url"), "url", "left_anti")
+        if self.enrichment:
+            # second fetch pass(es) keyed by the pass-1 entity id; the
+            # enriched copy lands in results/iter=k, which results_df
+            # prefers over this iteration's combined slice
+            enriched = combined.filter(F.col("kind") == "result").select(
                 "url", "rowkey", "family", "cols"
             )
             for spec in self.enrichment:
-                results = self._enrich(results, spec)
-            results.write.mode("overwrite").parquet(
+                enriched = self._enrich(enriched, spec)
+            enriched.write.mode("overwrite").parquet(
                 self._p("results", f"iter={k:06d}")
             )
-            _mark("fetch_extract_results")
+        _mark("fetch_extract_results")
         (
             fetched.select(
                 "url", "host", "host_hash", "depth", "discovery_iter", "score",
@@ -550,10 +536,7 @@ class CrawlEngine:
         )
         _mark("crawled_write")
 
-        if fused:
-            n_fetched = fetched.count()  # pruned count over kind=page files
-        else:
-            n_fetched = int(obs_fetched.get["n_fetched"])
+        n_fetched = fetched.count()  # pruned count over kind=page files
         n_missed = n_admitted - n_fetched
 
         # retry / failed split (Q5/Q6, …/crawler/SimpleWebCrawler.java:14,73-78)
@@ -572,45 +555,21 @@ class CrawlEngine:
             ).write.mode("overwrite").parquet(self._p("failed", f"iter={k:06d}"))
         _mark("failed_write")
 
-        # link discovery → normalize → should_visit gate → score (F1/F2)
-        # dedup links BEFORE the rules join: raw links are ~40×/page, the
-        # rules join is a nested-loop regex match — running it on the unique
-        # URL set instead of every (src,out) edge cuts regex evals ~an order
-        # of magnitude at scale.
-        if fused:
-            # fused link rows already carry the parent depth (partial
-            # combine done map-side in the fetch worker) — no join needed.
-            # Fetchers with links_normalized=True emit out_url already
-            # resolved + normalized (py_normalize_url parity contract), so
-            # the resolve+normalize regex stack is skipped on the full
-            # link volume — it would otherwise run ~10 regexes per link
-            # row before the dedup shuffle.
-            link_rows = combined.filter(F.col("kind") == "link")
-            if getattr(self.fetcher, "links_normalized", False):
-                out = F.col("out_url")
-            else:
-                out = normalize_url(resolve_link("url", "out_url"))
-            uniq_links = (
-                link_rows
-                .select(out.alias("url"), F.col("depth").alias("parent_depth"))
-                .filter(~F.col("url").rlike(EXT_BLACKLIST))
-                .groupBy("url")
-                .agg(F.min("parent_depth").alias("parent_depth"))
-            )
-        else:
-            links = combined.filter(F.col("kind") == "link").select(
-                F.col("url").alias("src_url"),
-                normalize_url(resolve_link("url", "out_url")).alias("url"),
-            )
-            parent_depth = fetched.select(
-                F.col("url").alias("src_url"), F.col("depth").alias("parent_depth")
-            )
-            uniq_links = (
-                links.filter(~F.col("url").rlike(EXT_BLACKLIST))
-                .join(parent_depth, "src_url")
-                .groupBy("url")
-                .agg(F.min("parent_depth").alias("parent_depth"))
-            )
+        # link discovery → should_visit gate → score (F1/F2). Link rows
+        # arrive resolved, normalized and pre-combined map-side with
+        # their min parent depth (the fused worker), so no parent-depth
+        # join and no per-link regex stack runs here. Dedup links BEFORE
+        # the rules join: the rules join is a nested-loop regex match —
+        # running it on the unique URL set instead of every (src,out)
+        # edge cuts regex evals ~an order of magnitude at scale.
+        uniq_links = (
+            combined.filter(F.col("kind") == "link")
+            .select(F.col("out_url").alias("url"),
+                    F.col("depth").alias("parent_depth"))
+            .filter(~F.col("url").rlike(EXT_BLACKLIST))
+            .groupBy("url")
+            .agg(F.min("parent_depth").alias("parent_depth"))
+        )
         candidates = (
             uniq_links
             .withColumn("score", self.rule_score())
@@ -917,10 +876,8 @@ class CrawlEngine:
             "metrics": metrics,
         })
         admitted.unpersist()
-        fetched.unpersist()
         if n_missed > 0:
             missed.unpersist()
-        combined.unpersist()
         return metrics
 
     def run(self, max_iters: int = 100) -> list[dict]:

@@ -108,9 +108,9 @@ _PY_P443 = _re.compile(r"^(https://[^/:]+):443(?=/|\?|$)")
 
 
 def py_normalize_url(url: str) -> str:
-    """Pure-Python replica of normalize_url, for fetch workers that emit
-    pre-normalized links (GeneratorFetcher's links_normalized contract) so
-    the scheduler's link pipeline can skip the resolve+normalize regex
+    """Pure-Python replica of normalize_url, for the fused fetch worker
+    (extractors.udfs.fetch_extract), which emits pre-normalized links so
+    the scheduler's link pipeline never runs the resolve+normalize regex
     stack on the full link volume. Byte-identical to the Column version
     on scheme-ful URLs without embedded newlines (property-tested in
     tests/test_frontier.py); a newline inside a URL would diverge (Java

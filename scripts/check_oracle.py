@@ -1,15 +1,19 @@
 """Driver-contract self-check: run every queries() entry and compare it
-against oracle_sql() via DuckDB (row count + column names + order-
-insensitive values), mimicking the driver's CORRECTNESS gate.
+against oracle_sql() via DuckDB (column names + per-column dtype family +
+row count + order-insensitive values), mimicking the driver's typed
+CORRECTNESS gate: an int64 column on one side and a float64 column with
+the same values on the other is a FAIL, exactly as in the driver's hash.
 
 Usage: PYTHONPATH=/root/repo python scripts/check_oracle.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import datetime
 import sys
 
 import duckdb
+import numpy as np
 
 sys.path.insert(0, "/root/repo")
 
@@ -20,6 +24,47 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
+
+
+def dtype_family(col) -> str:
+    """int / float / bool / timestamp from the numpy dtype; object columns
+    are classified by their first non-null value's Python type. An
+    all-null object column carries no type ("null") and matches any
+    family."""
+    kind = col.dtype.kind
+    if kind in "iu":
+        return "int"
+    if kind == "f":
+        return "float"
+    if kind == "b":
+        return "bool"
+    if kind in "mM":
+        return "timestamp"
+    vals = col.dropna()
+    if vals.empty:
+        return "null"
+    v = vals.iloc[0]
+    if isinstance(v, (bool, np.bool_)):
+        return "bool"
+    if isinstance(v, (int, np.integer)):
+        return "int"
+    if isinstance(v, (float, np.floating)):
+        return "float"
+    if isinstance(v, str):
+        return "str"
+    if isinstance(v, datetime.datetime):  # pd.Timestamp included
+        return "timestamp"
+    return type(v).__name__
+
+
+def family_mismatches(sdf, odf) -> list[str]:
+    out = []
+    for c in sorted(set(sdf.columns) & set(odf.columns)):
+        fs, fo = dtype_family(sdf[c]), dtype_family(odf[c])
+        if fs != fo and "null" not in (fs, fo):
+            out.append(f"{c}: spark {fs} ({sdf[c].dtype}) != "
+                       f"oracle {fo} ({odf[c].dtype})")
+    return out
 
 
 def normalize(df):
@@ -72,8 +117,12 @@ def main(sf_dir: str) -> int:
             continue
         scols, srows = normalize(sdf)
         ocols, orows = normalize(odf)
+        dtype_diff = family_mismatches(sdf, odf)
         if scols != ocols:
             print(f"FAIL  {name}: columns {scols} != {ocols}")
+            n_fail += 1
+        elif dtype_diff:
+            print(f"FAIL  {name}: dtype family differs: {'; '.join(dtype_diff)}")
             n_fail += 1
         elif len(srows) != len(orows):
             print(f"FAIL  {name}: rowcount {len(srows)} != {len(orows)}")

@@ -252,26 +252,67 @@ def test_fused_fetcher_resume_and_salts_parity(spark, tmp_path):
     assert res_a == res_b and len(res_a) > 0
 
 
+def _contract_rows(df):
+    """fetch_extract output as comparable sets: kind=page (url, lang),
+    kind=result (url, rowkey, family, cols) and kind=link out_url -> min
+    parent depth (link rows are pre-combined per partition, so the same
+    out_url may arrive from several partitions)."""
+    pages, results, links = set(), set(), {}
+    for r in df.collect():
+        if r["kind"] == "page":
+            pages.add((r["url"], r["lang"]))
+        elif r["kind"] == "result":
+            results.add((r["url"], r["rowkey"], r["family"],
+                         tuple(sorted(r["cols"].items()))))
+        else:
+            assert r["kind"] == "link", r["kind"]
+            d = links.get(r["out_url"])
+            links[r["out_url"]] = r["depth"] if d is None else min(d, r["depth"])
+    return pages, results, links
+
+
 def test_cross_fetcher_parity(spark, tmp_path):
-    """The fused GeneratorFetcher (bench path: regenerate page from URL,
-    extract in-worker, map-side link combine) must crawl EXACTLY like the
-    reference-faithful CorpusFetcher (corpus join + separate extract
-    stage) — same visit log per iteration, same results. This is what
-    makes the bench numbers a measurement of the same engine semantics."""
+    """Both fetchers implement the one fetch_extract contract through the
+    same fused worker, differing only in the page source (corpus join vs
+    regenerating the page from its URL). On one admitted set they must
+    emit equal page / result / link row sets, and a crawl through either
+    must produce the same visit log per iteration and the same results.
+    This is what makes the bench numbers (GeneratorFetcher) a measurement
+    of the engine the corpus-backed tests check."""
+    from dmp_crawler_spark.frontier.scheduler import FRONTIER_SCHEMA
+
     n = 300
     corpus = str(tmp_path / "pages")
     generator.write_pages(spark, n, corpus, partitions=4)
+    fetchers = {
+        "corpus": CorpusFetcher(spark, corpus),
+        "gen": generator.GeneratorFetcher(spark, n),
+    }
+
+    # contract level: every third URL, depths 0-3 so the min-depth link
+    # combine is load-bearing
+    urls = [templates.url_for(i, n) for i in range(0, n, 3)]
+    admitted = spark.createDataFrame(
+        [(u, u.split("/")[2], i, i % 4, 0, 1.0, 0) for i, u in enumerate(urls)],
+        FRONTIER_SCHEMA,
+    )
+    rows = {name: _contract_rows(f.fetch_extract(admitted))
+            for name, f in fetchers.items()}
+    pages, results, links = rows["gen"]
+    assert {u for u, _ in pages} == set(urls)
+    assert results and links
+    assert rows["corpus"][0] == pages
+    assert rows["corpus"][1] == results
+    assert rows["corpus"][2] == links
+
+    # crawl level
     seeds_df = spark.createDataFrame(
         [(templates.url_for((i * 7919) % n, n), "") for i in range(5)],
         "seed string, site string",
     )
     rules = generator.generate_site_rules(spark)
-
     engines = {}
-    for name, fetcher in (
-        ("corpus", CorpusFetcher(spark, corpus)),
-        ("gen", generator.GeneratorFetcher(spark, n)),
-    ):
+    for name, fetcher in fetchers.items():
         eng = CrawlEngine(
             spark, str(tmp_path / name), fetcher, rules,
             per_host_budget=3, n_bloom_shards=8,
@@ -631,8 +672,8 @@ def test_bloom_full_rebuild_trigger(spark, corpus_path, tmp_path):
 
 
 def test_py_normalize_url_parity(spark):
-    """py_normalize_url (the fetch-worker replica behind the
-    links_normalized contract) must be byte-identical to the Column
+    """py_normalize_url (the fetch-worker replica that normalizes every
+    kind='link' row) must be byte-identical to the Column
     normalize_url over every URL shape the href scanner can produce:
     case, ports, fragments, trailing '?', userinfo-ish hosts, and the
     urljoin outputs of the resolve parity matrix."""

@@ -77,6 +77,19 @@ def test_decode_wav_rejects_malformed():
     payload2 = b"RIFF" + struct.pack("<I", 4 + len(body2)) + b"WAVE" + body2
     with pytest.raises(ValueError, match="missing fmt or data"):
         multimodal.decode_wav(payload2)
+    # a second fmt or data chunk must not silently override the first
+    fmt_chunk, data_chunk = good[12:12 + 8 + 16], good[12 + 8 + 16:]
+    assert fmt_chunk[:4] == b"fmt " and data_chunk[:4] == b"data"
+    empty_data = b"data" + struct.pack("<I", 0)
+    for dup, body3 in (
+        ("fmt", fmt_chunk + fmt_chunk + data_chunk),
+        ("fmt", fmt_chunk + data_chunk + fmt_chunk),
+        ("data", fmt_chunk + data_chunk + data_chunk),
+        ("data", fmt_chunk + data_chunk + empty_data),
+    ):
+        payload3 = b"RIFF" + struct.pack("<I", 4 + len(body3)) + b"WAVE" + body3
+        with pytest.raises(ValueError, match=f"duplicate {dup} chunk"):
+            multimodal.decode_wav(payload3)
 
 
 def test_wav_strict_features_match_formula(spark):
